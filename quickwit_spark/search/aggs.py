@@ -28,11 +28,7 @@ from pyspark.sql import functions as F
 
 def matches(searcher, query, time_range=None, columns: list[str] | None = None) -> DataFrame:
     """Matching docs joined to their docmap (fast-field) columns."""
-    m = searcher.match_docs(query, time_range=time_range)
-    docs = searcher.docs()
-    if columns is not None:
-        docs = docs.select("segment_id", "doc_id", "doc_key", *columns)
-    return docs.join(m.select("segment_id", "doc_id"), ["segment_id", "doc_id"], "inner")
+    return searcher._match_frame(searcher._resolve(query, time_range), columns)
 
 
 def terms_agg_for_query(
@@ -59,8 +55,9 @@ def terms_agg_for_query(
     import numpy as np
     import pyarrow as pa
 
-    ast, fast_filter, seg_ids = searcher._resolve(query, time_range)
-    col = searcher._fcol(field) if hasattr(searcher, "_fcol") else field
+    resolved = searcher._resolve(query, time_range)
+    ast, fast_filter, seg_ids = resolved
+    col = searcher._fcol(field)
     from quickwit_spark.query.ast import MatchAll
 
     if isinstance(ast, MatchAll):
@@ -88,19 +85,14 @@ def terms_agg_for_query(
         if searched is None or s.segment_id in searched
     )
     if not (min_docs <= n_docs < max_docs):
-        m = searcher.match_docs(
-            query, time_range=time_range, _resolved=(ast, fast_filter, seg_ids)
-        ).select("segment_id", "doc_id")
-        joined = (
-            searcher._seg_pred_filter(searcher.docs(), seg_ids)
-            .select("segment_id", "doc_id", F.col(col).alias(field))
-            .join(m, ["segment_id", "doc_id"], "inner")
+        joined = searcher._match_frame(
+            resolved, columns=[F.col(col).alias(field)]
         )
         return terms_agg(joined, field, size)
 
-    m = searcher.match_docs(
-        query, time_range=time_range, _resolved=(ast, fast_filter, seg_ids)
-    ).select("segment_id", "doc_id")
+    m = searcher.match_docs(query, _resolved=resolved).select(
+        "segment_id", "doc_id"
+    )
     docs = searcher._seg_pred_filter(searcher.docs(), seg_ids).select(
         "segment_id", "doc_id", F.col(col).cast("string").alias("key")
     )

@@ -73,6 +73,11 @@ from quickwit_spark.search.kernel import SegmentData, evaluate_segment
 
 MATCH_SCHEMA = "segment_id string, doc_id long, score double"
 
+# docmap size (bytes) from which the winner fetch collects the winners
+# and pushes their ids into the docmap scan instead of a broadcast join
+# probing a full docmap scan (see `_fetch_winners`)
+FETCH_PUSHDOWN_MIN_BYTES = 128 << 20
+
 
 def qcol(name: str):
     """F.col that treats `name` VERBATIM (dynamic dot-path columns like
@@ -322,6 +327,7 @@ class IndexSearcher:
         self._aq_lock = threading.Lock()
         self._aq_tl = threading.local()
         self._active_queries = 0
+        self._dfreq_lock = threading.Lock()
         # per-generation config snapshots (builder.config_path): a
         # non-additive mapping update starts a new generation; queries
         # always validate against the NEWEST mapping
@@ -1069,31 +1075,39 @@ class IndexSearcher:
         never seen since the last refresh cost a (pushed-filter
         metadata) Spark job. Absent keys mean the term does not occur
         in that segment."""
-        if len(self._dfreq_fetched) > 200_000:  # bound driver memory
-            self._dfreq.clear()
-            self._dfreq_fetched.clear()
-        need = sorted(set(tvals) - self._dfreq_fetched)
+        need = set(tvals) - self._dfreq_fetched
         if need:
-            rows = (
-                self._seg_pred_filter(
-                    self.inv().filter(
-                        (F.col("kind") == KIND_POSTINGS)
-                        & F.col("term").isin(need)
-                    ),
-                    self.live_ids,
-                )
-                .select("segment_id", "field", "term", "doc_freq")
-                .collect()
-            )
-            for r in rows:
-                # merged segments CHUNK hot-term postings (several rows
-                # per (segment, field, term), one per docid range) —
-                # the term's doc_freq is the SUM over its chunk rows
-                k = (r["segment_id"], r["field"], r["term"])
-                self._dfreq[k] = self._dfreq.get(k, 0) + int(r["doc_freq"])
-            self._dfreq_fetched.update(need)
+            # serialised fetch-and-add: concurrent first lookups of a
+            # term must add its rows once, not once per thread
+            with self._dfreq_lock:
+                if len(self._dfreq_fetched) > 200_000:  # bound driver memory
+                    self._dfreq.clear()
+                    self._dfreq_fetched.clear()
+                need = sorted(set(tvals) - self._dfreq_fetched)
+                if need:
+                    rows = (
+                        self._seg_pred_filter(
+                            self.inv().filter(
+                                (F.col("kind") == KIND_POSTINGS)
+                                & F.col("term").isin(need)
+                            ),
+                            self.live_ids,
+                        )
+                        .select("segment_id", "field", "term", "doc_freq")
+                        .collect()
+                    )
+                    for r in rows:
+                        # merged segments CHUNK hot-term postings (several
+                        # rows per (segment, field, term), one per docid
+                        # range) — the term's doc_freq is the SUM over its
+                        # chunk rows
+                        k = (r["segment_id"], r["field"], r["term"])
+                        self._dfreq[k] = self._dfreq.get(k, 0) + int(r["doc_freq"])
+                    self._dfreq_fetched.update(need)
         ts = set(tvals)
-        return {k: v for k, v in self._dfreq.items() if k[2] in ts}
+        # list() snapshots the items in one step: another thread's add
+        # cannot resize the dict mid-iteration
+        return {k: v for k, v in list(self._dfreq.items()) if k[2] in ts}
 
     def _global_stats(self, terms: list[tuple[str, str]]) -> dict:
         """Global (N, total_tokens) per field from the manifest + global
@@ -1242,10 +1256,7 @@ class IndexSearcher:
         # concurrently), giving EACH query a full worker wave makes
         # them contend for slots instead of pipelining; divide the wave
         # by the number of queries currently being planned/executed on
-        # this searcher. QWS_KERNEL_WAVE_FRACTION (0 < f ≤ 1) scales
-        # the solo width for deployments that know their concurrency.
-        frac = float(os.environ.get("QWS_KERNEL_WAVE_FRACTION", "1") or 1)
-        wave = max(1, int(wave * min(max(frac, 0.01), 1.0)))
+        # this searcher.
         active = max(1, int(getattr(self, "_active_queries", 0)))
         kparts = max(1, min(n_groups or 1, max(1, wave // active)))
         if fast_filter is not None:
@@ -1327,19 +1338,21 @@ class IndexSearcher:
         walk(ast)
         return lo, hi
 
-    def _resolve(self, query, time_range):
-        ast = (
-            parse_query(
-                query,
-                [f.name for f in self.config.fields],
-                position_fields={
-                    f.name for f in self.config.fields if f.record == "position"
-                },
-            )
-            if isinstance(query, str)
-            else query
+    def _parse(self, query) -> QueryAst:
+        """Query string → AST over the index's default fields (an AST
+        passes through)."""
+        if not isinstance(query, str):
+            return query
+        return parse_query(
+            query,
+            [f.name for f in self.config.fields],
+            position_fields={
+                f.name for f in self.config.fields if f.record == "position"
+            },
         )
-        ast = self._normalize_ast(ast)
+
+    def _resolve(self, query, time_range):
+        ast = self._normalize_ast(self._parse(query))
         if self.config.time_column:
             ast_lo, ast_hi = self._ast_time_bounds(ast)
             if ast_lo is not None or ast_hi is not None:
@@ -1364,6 +1377,16 @@ class IndexSearcher:
             _resolved if _resolved is not None else self._resolve(query, time_range)
         )
         return self._matches(ast, seg_ids, None, mode, fast_filter)
+
+    def _match_frame(self, resolved: tuple, columns=None) -> DataFrame:
+        """The one match-set ⋈ docmap join: every matching doc with its
+        docmap (fast-field) columns — all of them, or (segment_id,
+        doc_id, doc_key, *columns) — for aggregations and exports."""
+        m = self.match_docs(None, _resolved=resolved).select("segment_id", "doc_id")
+        docs = self._seg_pred_filter(self.docs(), resolved[2])
+        if columns is not None:
+            docs = docs.select("segment_id", "doc_id", "doc_key", *columns)
+        return docs.join(m, ["segment_id", "doc_id"], "inner")
 
     @_concurrent_span
     def count(self, query, time_range=None, segments=None, _resolved=None) -> int:
@@ -1424,6 +1447,86 @@ class IndexSearcher:
                 return total, False
         return total, True
 
+    def _fetch_cols(self, fetch) -> list[str]:
+        """ES `_source`/fetch is a FILTER over the stored doc: unknown
+        fields are silently absent from the hit (reference
+        filter_source, `rest_handler.rs:674-742`), never an
+        AnalysisException; doc_key, always selected positionally, is
+        never fetched twice."""
+        doc_cols = set(self.docs().columns)
+        return list(
+            dict.fromkeys(
+                c
+                for c in (fetch or [])
+                if c != "doc_key" and self._fcol(c) in doc_cols
+            )
+        )
+
+    def _fetch_winners(
+        self,
+        matches: DataFrame,
+        k: int,
+        order: list,
+        head: list[str],
+        fetch: list[str] | None,
+        sort_keys=(),
+        after=None,
+        bounded: bool = True,
+    ) -> DataFrame:
+        """The one winner-fetch seam (reference fetch phase,
+        `fetch_docs.rs:108-167`): join the match rows (segment_id,
+        doc_id[, score]) to their docmap rows, keep the rows strictly
+        `after` the cursor, take the first `k` in `order` and rank them
+        → (doc_key, *head, rank, *fetch cols[, segment_id]).
+        `sort_keys` are (field, alias) docmap columns `order` reads;
+        `bounded` says the match set is small (≤ k per segment plus
+        cutoff ties) and may be materialized."""
+        fetch_cols = self._fetch_cols(fetch)
+        docs = self.docs().select(
+            "segment_id", "doc_id", "doc_key",
+            *[qcol(self._fcol(f)).alias(a) for f, a in sort_keys],
+            *[qcol(self._fcol(c)).alias(c) for c in fetch_cols],
+        )
+        # A plain broadcast join still SCANS the ENTIRE docmap to probe
+        # the hash table (at 20 M docs that scan alone costs more than
+        # the kernel), so once the docmap is big a bounded winner set is
+        # collected — the materialization broadcast would do, one job
+        # earlier — and its ids are pushed INTO the docmap parquet scan
+        # as In predicates (row-group pruning); the join against the
+        # re-created winner rows restores the exact (segment_id, doc_id)
+        # pairing. The collect costs one extra Spark job (~0.3 s), so
+        # below FETCH_PUSHDOWN_MIN_BYTES the single-job broadcast wins.
+        if bounded and self._docmap_bytes() >= FETCH_PUSHDOWN_MIN_BYTES:
+            # the kernel runs during the collect — never join against
+            # `matches` after it, that would re-execute the kernel
+            win_rows = matches.collect()
+            if 0 < len(win_rows) <= 4096:
+                # larger winner sets skip the In pushdown (plan bloat)
+                # but still broadcast the materialized rows
+                docs = docs.filter(
+                    F.col("segment_id").isin(
+                        sorted({r["segment_id"] for r in win_rows})
+                    )
+                    & F.col("doc_id").isin(sorted({r["doc_id"] for r in win_rows}))
+                )
+            matches = self.spark.createDataFrame(win_rows, matches.schema)
+        hits = docs.join(
+            F.broadcast(matches) if bounded else matches,
+            ["segment_id", "doc_id"],
+            "inner",
+        )
+        if after is not None:
+            hits = hits.filter(after)
+        hits = hits.orderBy(*order).limit(k)
+        # rank runs on the <= k winner rows — WindowExec's global-
+        # window warning here is about a plan that never exceeds k rows
+        w = Window.orderBy(*order)
+        return hits.select(
+            "doc_key", *head, F.row_number().over(w).alias("rank"),
+            *[qcol(c) for c in fetch_cols],
+            *(["segment_id"] if self._multi_gen else []),
+        )
+
     @_concurrent_span
     def sort_by_field(
         self,
@@ -1468,31 +1571,12 @@ class IndexSearcher:
             specs = [(sort_field, descending)]
         if len(specs) > 2:
             raise ValueError("at most 2 sort keys (reference collector limit)")
-        sort_cols = [f for f, _ in specs]
         out_aliases = ["sort_value", "sort_value2"][: len(specs)]
-        # fetch columns keep their OWN names even when they are also a
-        # sort key (the sort key additionally appears as sort_value*) —
-        # an ES `_source` listing a sort field must not read back null.
-        # Unknown fields are silently absent like the score path
-        # (reference filter_source semantics), not an AnalysisException.
-        doc_cols_avail = set(self.docs().columns)
-        fetch_cols = list(
-            dict.fromkeys(
-                c
-                for c in (fetch or [])
-                if c != "doc_key" and self._fcol(c) in doc_cols_avail
-            )
-        )
         ast, fast_filter, seg_ids = (
             _resolved if _resolved is not None else self._resolve(query, time_range)
         )
         m = self._matches(ast, seg_ids, None, "parity", fast_filter, use_wand=False)
-        docs = self.docs().select(
-            "segment_id", "doc_id", "doc_key",
-            *[qcol(self._fcol(f)).alias(a) for (f, _), a in zip(specs, out_aliases)],
-            *[qcol(self._fcol(c)).alias(c) for c in fetch_cols],
-        )
-        hits = docs.join(m.select("segment_id", "doc_id"), ["segment_id", "doc_id"])
+        pred = None
         if search_after is not None:
             tie_by_key = True
             vals = list(search_after)
@@ -1528,7 +1612,6 @@ class IndexSearcher:
                     after = (sv < cv if desc_ else sv > cv) | sv.isNull()
                     eq = sv == cv
                 pred = after | (eq & pred)
-            hits = hits.filter(pred)
         tie = (
             [F.col("doc_key")]
             if tie_by_key
@@ -1540,14 +1623,13 @@ class IndexSearcher:
             order.append(c.desc_nulls_last() if desc_ else c.asc_nulls_last())
         primary_desc = specs[0][1]
         order += [c.desc() if primary_desc else c.asc() for c in tie]
-        hits = hits.orderBy(*order).limit(k)
-        # rank runs on the <= k winner rows — WindowExec's global-
-        # window warning here is about a plan that never exceeds k rows
-        w = Window.orderBy(*order)
-        return hits.select(
-            "doc_key", *out_aliases, F.row_number().over(w).alias("rank"),
-            *[qcol(c) for c in fetch_cols],
-            *(["segment_id"] if self._multi_gen else []),
+        # fetch columns keep their OWN names even when they are also a
+        # sort key (the sort key additionally appears as sort_value*) —
+        # an ES `_source` listing a sort field must not read back null
+        return self._fetch_winners(
+            m.select("segment_id", "doc_id"), k, order, out_aliases, fetch,
+            sort_keys=[(f, a) for (f, _), a in zip(specs, out_aliases)],
+            after=pred, bounded=False,
         )
 
     @_concurrent_span
@@ -1608,21 +1690,9 @@ class IndexSearcher:
             else:
                 bounded = False
         snippet_fields = list(snippet_fields or [])
-        # doc_key is always selected positionally — fetching it again
-        # would duplicate the column (same guard as sort_by_field)
-        doc_cols = set(self.docs().columns)
-        # ES `_source`/fetch is a FILTER over the stored doc: unknown
-        # fields are silently absent from the hit (reference
-        # filter_source, `rest_handler.rs:674-742`), never an error —
-        # and never an AnalysisException from selecting a missing column
-        fetch_cols = list(
-            dict.fromkeys(
-                c
-                for c in (fetch or [])
-                if c != "doc_key" and self._fcol(c) in doc_cols
-            )
-        )
+        fetch_cols = self._fetch_cols(fetch)
         raw_cols = fetch_cols + [c for c in snippet_fields if c not in fetch_cols]
+        doc_cols = set(self.docs().columns)
         bad = [c for c in snippet_fields if self._fcol(c) not in doc_cols]
         if bad:
             # snippet fields DO validate — the reference 400s "the
@@ -1631,53 +1701,7 @@ class IndexSearcher:
             raise ValueError(
                 f"snippet field(s) not stored in the docmap: {bad}"
             )
-        docs = self.docs().select(
-            "segment_id", "doc_id", "doc_key",
-            *[qcol(self._fcol(c)).alias(c) for c in raw_cols],
-        )
-        # winners are ≤ k×segments (+ cutoff ties) rows. A plain
-        # broadcast join would still SCAN the ENTIRE docmap to probe the
-        # hash table (at 20 M docs that scan alone costs more than the
-        # kernel), so for bounded match sets the winners are collected —
-        # the same materialization broadcast would do, one job earlier —
-        # and their segment/doc ids are pushed INTO the docmap parquet
-        # scan as In predicates (row-group pruning); the join against
-        # the re-created winner rows then restores exact (segment_id,
-        # doc_id) pairing + scores. Falls back to the broadcast join
-        # when the winner set is too large for literal pushdown (plan
-        # bloat) or unbounded (match-all).
-        # size-aware: the collect adds one extra Spark job per query
-        # (~0.3 s on this host), which only pays off once the docmap is
-        # big enough that the full-scan probe costs more — below the
-        # threshold the classic single-job broadcast join wins
-        win_rows = None
-        if bounded and self._docmap_bytes() >= int(
-            os.environ.get("QWS_FETCH_PUSHDOWN_MIN_BYTES", str(128 << 20))
-        ):
-            win_rows = matches.collect()
-        if win_rows is not None:
-            # kernel already ran during the collect — NEVER join against
-            # `matches` here, that would re-execute it; the collected
-            # rows are the winner set in every branch
-            win_df = self.spark.createDataFrame(win_rows, matches.schema)
-            if 0 < len(win_rows) <= 4096:
-                seg_set = sorted({r["segment_id"] for r in win_rows})
-                id_set = sorted({r["doc_id"] for r in win_rows})
-                docs = docs.filter(
-                    F.col("segment_id").isin(seg_set)
-                    & F.col("doc_id").isin(id_set)
-                )
-            # oversized winner sets skip the In pushdown (plan bloat)
-            # but still broadcast the materialized rows
-            hits = docs.join(
-                F.broadcast(win_df), ["segment_id", "doc_id"], "inner"
-            )
-        else:
-            hits = docs.join(
-                F.broadcast(matches) if bounded else matches,
-                ["segment_id", "doc_id"],
-                "inner",
-            )
+        after = None
         if search_after is not None:
             if len(search_after) == 1:
                 # values-only ES cursor: strictly-after on score alone;
@@ -1685,23 +1709,14 @@ class IndexSearcher:
                 sa_score, sa_key = search_after[0], None
             else:
                 sa_score, sa_key = search_after
-            cond = F.col("score") < sa_score
+            after = F.col("score") < sa_score
             if sa_key is not None:
-                cond = cond | (
+                after = after | (
                     (F.col("score") == sa_score) & (F.col("doc_key") < sa_key)
                 )
-            hits = hits.filter(cond)
         order = [F.col("score").desc(), F.col("doc_key").desc()]
-        hits = hits.orderBy(*order).limit(k)
-        # rank runs on the <= k winner rows — WindowExec's global-
-        # window warning here is about a plan that never exceeds k rows
-        w = Window.orderBy(*order)
-        hits = hits.select(
-            "doc_key",
-            "score",
-            F.row_number().over(w).alias("rank"),
-            *[qcol(c) for c in raw_cols],
-            *(["segment_id"] if self._multi_gen else []),
+        hits = self._fetch_winners(
+            matches, k, order, ["score"], raw_cols, after=after, bounded=bounded
         )
         if snippet_fields:
             from quickwit_spark.search.snippets import attach_snippets
@@ -1713,9 +1728,8 @@ class IndexSearcher:
             hits = attach_snippets(
                 hits, snippet_fields, per_field, snippet_max_chars
             )
-            keep = [c for c in raw_cols if c in fetch_cols]
             hits = hits.select(
-                "doc_key", "score", "rank", *[qcol(c) for c in keep],
+                "doc_key", "score", "rank", *[qcol(c) for c in fetch_cols],
                 *[qcol(f"snippet_{f}") for f in snippet_fields],
                 *(["segment_id"] if self._multi_gen else []),
             )
@@ -1930,20 +1944,8 @@ class IndexSearcher:
             )
         if mode == "oracle":
             matches = matches.withColumn("score", F.round(F.col("score"), 9))
-        fetch_cols = list(fetch or [])
-        docs = self.docs().select(
-            "segment_id", "doc_id", "doc_key",
-            *[qcol(self._fcol(c)).alias(c) for c in fetch_cols],
-        )
-        hits = docs.join(F.broadcast(matches), ["segment_id", "doc_id"], "inner")
         order = [F.col("score").desc(), F.col("doc_key").desc()]
-        hits = hits.orderBy(*order).limit(k)
-        w = Window.orderBy(*order)
-        hits = hits.select(
-            "doc_key", "score", F.row_number().over(w).alias("rank"),
-            *[qcol(c) for c in fetch_cols],
-            *(["segment_id"] if self._multi_gen else []),
-        )
+        hits = self._fetch_winners(matches, k, order, ["score"], fetch)
         if count_hits == "underestimate":
             # reference CountHits::Underestimate (search.proto:245-248):
             # count only the splits actually searched; demoted segments
@@ -2027,19 +2029,8 @@ class IndexSearcher:
         tok = self._tokenizer_for_field()
         terms = collect_fulltext_terms(ast, tok)
         pruned = [s for s in self.segments if s.segment_id not in set(seg_ids)]
-        pre_expand = (
-            parse_query(
-                query,
-                [f.name for f in self.config.fields],
-                position_fields={
-                    f.name for f in self.config.fields if f.record == "position"
-                },
-            )
-            if isinstance(query, str)
-            else query
-        )
         tag_filter = extract_tag_filter(
-            pre_expand, lambda field, text: tok(field)(text)
+            self._parse(query), lambda field, text: tok(field)(text)
         )
         df = self.search(
             query, k=k, time_range=time_range,
@@ -2078,23 +2069,22 @@ class IndexSearcher:
             "spark_plan": buf.getvalue(),
         }
 
-    def es_search(self, body: dict, mode: str = "parity") -> dict:
+    def es_search(
+        self, body: dict, mode: str = "parity", _resolved: tuple | None = None
+    ) -> dict:
         """Full ES `_search` body: `query` + `aggs` + `size` (reference
         rest handler surface, `elastic_search_api`). Returns
         {"hits": DataFrame (absent when size=0),
-         "aggregations": {name: DataFrame}}."""
-        from quickwit_spark.query.es_dsl import from_es_body
-        from quickwit_spark.search import aggs as _aggs
+         "aggregations": {name: DataFrame}}. `_resolved` is the body's
+        already-resolved plan (one pattern expansion per request)."""
         from quickwit_spark.search.es_aggs import run_es_aggs
 
-        ast = from_es_body(
-            body,
-            [f.name for f in self.config.fields],
-            position_fields={
-                f.name for f in self.config.fields if f.record == "position"
-            },
-            known_fields=self._known_fields(),
+        resolved = (
+            _resolved
+            if _resolved is not None
+            else self._resolve(self._es_ast(body), None)
         )
+        ast = resolved[0]
         out: dict = {}
         size = _es_uint(body, "size", 10)
         # `from` pagination (reference start_offset,
@@ -2105,7 +2095,6 @@ class IndexSearcher:
         # negative-k paging
         start_offset = _es_uint(body, "from", 0)
         k_total = start_offset + size
-        resolved = self._resolve(ast, None)  # shared: one pattern expansion
         sort_spec = body.get("sort")
         fetch = list(body.get("_source") or [])
         if not fetch and self.config.stored_source:
@@ -2180,14 +2169,9 @@ class IndexSearcher:
             )
         agg_body = body.get("aggs") or body.get("aggregations")
         if agg_body:
-            m = self.docs().join(
-                self.match_docs(ast, _resolved=resolved).select(
-                    "segment_id", "doc_id"
-                ),
-                ["segment_id", "doc_id"],
-                "inner",
+            m, agg_body = self._agg_frame_and_body(
+                self._match_frame(resolved), agg_body
             )
-            m, agg_body = self._agg_frame_and_body(m, agg_body)
             out["aggregations"] = run_es_aggs(m, agg_body)
         return out
 
@@ -2325,8 +2309,10 @@ class IndexSearcher:
 
         t0 = _time.perf_counter()
         src_cols = body.get("_source") or []
-        inner = dict(body)
-        raw = self.es_search(inner, mode=mode)
+        # resolve the body ONCE: hits, aggs and the counting pass share
+        # the plan — re-resolving would re-run wildcard/regex expansion
+        resolved = self._resolve(self._es_ast(body), None)
+        raw = self.es_search(body, mode=mode, _resolved=resolved)
         sort_spec = body.get("sort")
         field_sort = bool(sort_spec) and not self._is_score_sort(sort_spec)
         specs_full = self._parse_es_sort_full(sort_spec) if field_sort else []
@@ -2401,16 +2387,12 @@ class IndexSearcher:
         count_all = tth is True or (
             isinstance(tth, int) and not isinstance(tth, bool) and tth > size
         )
-        # resolve the body's AST ONCE for the counting pass —
-        # re-resolving would re-run wildcard/regex expansion jobs.
         # `false` takes the same Underestimate path as absent — the
         # reference maps Track(false) to CountHits::Underestimate, not
         # to a no-count response.
-        count_ast = self._es_ast(body)
-        count_resolved = self._resolve(count_ast, None)
         if count_all:
             total = {
-                "value": self.count(count_ast, _resolved=count_resolved),
+                "value": self.count(resolved[0], _resolved=resolved),
                 "relation": "eq",
             }
         else:
@@ -2429,8 +2411,7 @@ class IndexSearcher:
                 else 0
             )
             v, exhausted = self.count_up_to(
-                count_ast, max(n, served, 1),
-                _resolved=count_resolved,
+                resolved[0], max(n, served, 1), _resolved=resolved
             )
             total = {"value": v, "relation": "eq" if exhausted else "gte"}
         out = {
@@ -2478,6 +2459,9 @@ class IndexSearcher:
         return known
 
     def _es_ast(self, body: dict):
+        """The one ES body → QueryAst conversion (`_search`, `_count`,
+        scroll): default and position fields plus the mapping's known
+        fields for non-lenient `query_string` validation."""
         from quickwit_spark.query.es_dsl import from_es_body
 
         return from_es_body(
@@ -2674,14 +2658,9 @@ class IndexSearcher:
         """ES `_count` endpoint: {"count", "_shards"} for the body's
         `query` (MatchAll when absent) — reference
         `es_compat_index_count_handler`."""
-        from quickwit_spark.query.ast import MatchAll as _MatchAll
-        from quickwit_spark.query.es_dsl import from_es_query
-
-        q = (body or {}).get("query")
-        ast = from_es_query(q) if q else _MatchAll()
         nseg = len(self.segments)
         return {
-            "count": self.count(ast),
+            "count": self.count(self._es_ast(body or {})),
             "_shards": {
                 "total": nseg,
                 "successful": nseg,
@@ -2837,8 +2816,7 @@ class IndexSearcher:
     def search_stream(self, query, columns: list[str], time_range=None) -> DataFrame:
         """Export fast-field columns of ALL matching docs (reference
         search_stream, `search_stream/leaf.rs:51-290`)."""
-        m = self.match_docs(query, time_range)
-        return m.join(self.docs(), ["segment_id", "doc_id"], "inner").select(
+        return self._match_frame(self._resolve(query, time_range)).select(
             "doc_key", *columns
         )
 

@@ -818,20 +818,23 @@ class EsWireHandler:
         fetch = list(body.get("_source") or [])
         if not fetch and searcher.config.stored_source:
             fetch = [searcher.config.stored_source]
+        # one parse + resolve serves the context, the total and the aggs
+        ast = searcher._es_ast(body)
+        resolved = searcher._resolve(ast, None)
         ctx = ScrollContext(
             searcher,
-            searcher._es_ast(body),
+            ast,
             page_size=size,
             fetch=fetch,
             sort_field=sort_field,
             descending=desc,
         )
         create_scroll(ctx)
-        total = searcher.count(searcher._es_ast(body))
+        total = searcher.count(ast, _resolved=resolved)
         aggs_shaped = None
         agg_body = body.get("aggs") or body.get("aggregations")
         if agg_body:
-            raw = searcher.es_search({**body, "size": 0})
+            raw = searcher.es_search({**body, "size": 0}, _resolved=resolved)
             aggs_shaped = {
                 name: shape_es_agg(agg_body[name], df)
                 for name, df in (raw.get("aggregations") or {}).items()

@@ -124,26 +124,21 @@ class MultiIndexSearcher:
         aggregations run once over the union of match frames. The query
         is resolved against EACH index's own field config, like the
         reference's per-index doc-mapper resolution."""
-        from quickwit_spark.query.es_dsl import from_es_body
         from quickwit_spark.search.es_aggs import run_es_aggs
 
         out: dict = {}
         size = int(body.get("size", 10))
-
-        def ast_for(s: IndexSearcher):
-            return from_es_body(
-                body,
-                [f.name for f in s.config.fields],
-                position_fields={
-                    f.name for f in s.config.fields if f.record == "position"
-                },
-            )
+        # one resolved plan per member serves its hits, total and aggs
+        plans = [
+            (d, s, s._resolve(s._es_ast(body), None)) for d, s in self.searchers
+        ]
 
         if size > 0:
             parts = []
-            for d, s in self.searchers:
-                df = s.search(ast_for(s), k=size, mode=mode,
-                              fetch=list(body.get("_source") or []))
+            for d, s, plan in plans:
+                df = s.search(None, k=size, mode=mode,
+                              fetch=list(body.get("_source") or []),
+                              _resolved=plan)
                 parts.append(
                     df.drop("rank").withColumn(
                         "_index", F.lit(os.path.basename(d.rstrip("/")))
@@ -160,16 +155,15 @@ class MultiIndexSearcher:
                 .filter(F.col("rank") <= size)
                 .orderBy("rank")
             )
-        out["total"] = sum(s.count(ast_for(s)) for _, s in self.searchers)
+        out["total"] = sum(s.count(None, _resolved=plan) for _, s, plan in plans)
         if body.get("aggs"):
-            from quickwit_spark.search import aggs as _aggs
             from quickwit_spark.search.es_aggs import _validate_aggs
 
             agg_body = body["aggs"]
             _validate_aggs(None, agg_body)
             # one frame per index (resolved per index config), one
             # distributed agg plan over the union
-            mparts = [_aggs.matches(s, ast_for(s)) for _, s in self.searchers]
+            mparts = [s._match_frame(plan) for _, s, plan in plans]
             mu = mparts[0]
             for p in mparts[1:]:
                 mu = mu.unionByName(p, allowMissingColumns=True)

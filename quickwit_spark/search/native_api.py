@@ -165,11 +165,13 @@ def native_search(searcher, params: dict) -> dict:
     start_offset = _uint_param(params, "start_offset", 0)
     count_all = str(params.get("count_all", "true")).lower() != "false"
 
+    # one resolved plan serves the count, hits, snippets and aggs
+    resolved = searcher._resolve(query, time_range)
     if count_all:
-        num_hits = searcher.count(query, time_range)
+        num_hits = searcher.count(query, _resolved=resolved)
     else:
         num_hits, _exact = searcher.count_up_to(
-            query, start_offset + max_hits, time_range
+            query, start_offset + max_hits, _resolved=resolved
         )
 
     rows = []
@@ -184,17 +186,17 @@ def native_search(searcher, params: dict) -> dict:
         if sort_by and "_score" not in str(sort_by):
             specs = _sort_specs(sort_by)
             df = searcher.sort_by_field(
-                query, specs, k=k, time_range=time_range, fetch=fetch,
-                tie_by_key=True,
+                query, specs, k=k, fetch=fetch, tie_by_key=True,
+                _resolved=resolved,
             )
             if snippet_fields:
                 df = _attach_native_snippets(
-                    searcher, df, query, time_range, snippet_fields
+                    searcher, df, resolved[0], snippet_fields
                 )
         else:
             df = searcher.search(
-                query, k=k, time_range=time_range, fetch=fetch,
-                snippet_fields=snippet_fields or None,
+                query, k=k, fetch=fetch,
+                snippet_fields=snippet_fields or None, _resolved=resolved,
             )
         rows = df.collect()[start_offset:]
     snip_cols = {f"snippet_{f}" for f in snippet_fields}
@@ -219,9 +221,7 @@ def native_search(searcher, params: dict) -> dict:
         ]
     aggs_param = params.get("aggs")
     if aggs_param:
-        out["aggregations"] = _run_native_aggs(
-            searcher, query, time_range, aggs_param
-        )
+        out["aggregations"] = _run_native_aggs(searcher, resolved, aggs_param)
     out["elapsed_time_micros"] = int((time.perf_counter() - t_start) * 1e6)
     return out
 
@@ -286,14 +286,14 @@ def native_search_plan(searcher, params: dict) -> dict:
     }
 
 
-def _attach_native_snippets(searcher, df, query, time_range, snippet_fields):
-    """Snippets for field-sorted hits: the score path highlights inside
-    `searcher.search`; the sort path fetches raw field values here and
-    runs the same ≤k-row highlighter over them."""
+def _attach_native_snippets(searcher, df, ast, snippet_fields):
+    """Snippets for field-sorted hits of the resolved query `ast`: the
+    score path highlights inside `searcher.search`; the sort path
+    fetches raw field values here and runs the same ≤k-row highlighter
+    over them."""
     from quickwit_spark.query.ast import collect_fulltext_terms
     from quickwit_spark.search.snippets import attach_snippets
 
-    ast, _ff, _segs = searcher._resolve(query, time_range)
     tok = searcher._tokenizer_for_field()
     per_field: dict[str, set[str]] = {}
     for fld, t in collect_fulltext_terms(ast, tok):
@@ -326,9 +326,10 @@ def _attach_native_snippets(searcher, df, query, time_range, snippet_fields):
     return df.orderBy("rank")
 
 
-def _run_native_aggs(searcher, query, time_range, aggs_param) -> dict:
+def _run_native_aggs(searcher, resolved, aggs_param) -> dict:
     """The `aggs` query parameter (tantivy aggregation JSON): run over
-    the full match set and shape like the reference response."""
+    the full match set of the `resolved` plan and shape like the
+    reference response."""
     from quickwit_spark.search.es_aggs import run_es_aggs, shape_es_agg
 
     agg_body = (
@@ -336,16 +337,9 @@ def _run_native_aggs(searcher, query, time_range, aggs_param) -> dict:
     )
     if not isinstance(agg_body, dict):
         raise ValueError("aggs must be a JSON object")
-    resolved = searcher._resolve(query, time_range)
-    ast = resolved[0]
-    m = searcher.docs().join(
-        searcher.match_docs(ast, _resolved=resolved).select(
-            "segment_id", "doc_id"
-        ),
-        ["segment_id", "doc_id"],
-        "inner",
+    m, lowered = searcher._agg_frame_and_body(
+        searcher._match_frame(resolved), agg_body
     )
-    m, lowered = searcher._agg_frame_and_body(m, agg_body)
     raw = run_es_aggs(m, lowered)
     # shape with the ORIGINAL spec (dot-path field names), like the ES
     # envelope does — the lowered body renames dynamic-path columns

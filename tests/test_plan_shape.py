@@ -18,6 +18,7 @@ import pytest
 
 from quickwit_spark.index.builder import FieldConfig, IndexConfig, build_index
 from quickwit_spark.query.ast import Term
+from quickwit_spark.search import engine
 from quickwit_spark.search.engine import IndexSearcher
 from quickwit_spark.sources.corpus import web_corpus
 
@@ -163,7 +164,7 @@ def test_fetch_pushdown_path_equals_broadcast_path(searcher, monkeypatch):
         (r["doc_key"], r["score"], r["rank"])
         for r in searcher.search(q, k=7).collect()
     ]
-    monkeypatch.setenv("QWS_FETCH_PUSHDOWN_MIN_BYTES", "0")
+    monkeypatch.setattr(engine, "FETCH_PUSHDOWN_MIN_BYTES", 0)
     forced = [
         (r["doc_key"], r["score"], r["rank"])
         for r in searcher.search(q, k=7).collect()
@@ -171,3 +172,53 @@ def test_fetch_pushdown_path_equals_broadcast_path(searcher, monkeypatch):
     assert forced == base
     # zero-hit query through the pushdown gate: clean empty result
     assert searcher.search(FullText("text", "zzzznope", "or"), k=5).collect() == []
+
+
+def _job_count(spark, fn) -> int:
+    """Spark jobs `fn` runs, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"plan-shape-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "plan shape")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_term_topk_runs_three_jobs(spark, searcher):
+    """A term top-k is kernel shuffle + winner broadcast + final
+    collect: a fourth job is a plan-shape regression."""
+    q = Term("text", "spark")
+    searcher.search(q, k=10).collect()  # count a steady-state query
+    assert _job_count(spark, lambda: searcher.search(q, k=10).collect()) == 3
+
+
+def test_es_wildcard_search_expands_once(searcher, monkeypatch):
+    """One `_search` request resolves its body once: the hits, the
+    total and the aggs share one term-dictionary expansion."""
+    from quickwit_spark.search.es_wire import EsWireHandler
+
+    calls = []
+    orig = searcher._expand_one
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(searcher, "_expand_one", counting)
+    resp = EsWireHandler({"web": searcher}).request(
+        "POST", "/web/_search",
+        body={
+            "size": 5,
+            "query": {"wildcard": {"text": {"value": "spa*"}}},
+            "track_total_hits": True,
+            "aggs": {"by_lang": {"terms": {"field": "lang"}}},
+        },
+    )
+    assert resp["hits"]["total"]["value"] > 0
+    assert len(calls) == 1
